@@ -146,17 +146,15 @@ object Checkpoint {
     // near-empty chunks buys nothing but task/file overhead, and a
     // fewer-than-pool CPU-heavy run still gets cores/pool tasks per
     // chunk — orders above the 1-task collapse this guards against.
-    // At real scale bytes/split dominates and the floor is inert.
+    // The floor itself is clamped to the shuffle width, so the result
+    // never exceeds it. At real scale bytes/split dominates and the
+    // floor is inert.
     val chunkPartitions: Option[Int] = scala.util.Try {
       val p = new org.apache.hadoop.fs.Path(s"$srcDir/chunk=$k")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val bytes = fs.getContentSummary(p).getLength
-      val split = spark.sessionState.conf.filesMaxPartitionBytes
-      val width = spark.sessionState.conf.numShufflePartitions
-      val floor = math.max(1,
-        spark.sparkContext.defaultParallelism / overlapPoolSize)
-      math.max(floor.toLong,
-        math.min(width.toLong, (bytes + split - 1) / split)).toInt
+      chunkPartitionCount(fs.getContentSummary(p).getLength,
+        spark.sessionState.conf.filesMaxPartitionBytes,
+        spark.sessionState.conf.numShufflePartitions, spark.sparkContext.defaultParallelism)
     }.toOption
     // metrics observed on the write job itself — no re-read of the
     // written files (the Iceberg analogue stores these in snapshot
@@ -166,7 +164,7 @@ object Checkpoint {
         count(lit(1)).as("rows"),
         coalesce(sum(col("metrics.wordCount")), lit(0L)).as("words"),
         coalesce(sum(when(col("metrics.parseFailed"), 1L).otherwise(0L)), lit(0L)).as("parse_failures"))
-      .write.mode("overwrite").parquet(s"$outDir/chunk=$k")
+      .write.mode("overwrite").options(plainIdColumns(cfg)).parquet(s"$outDir/chunk=$k")
     val m = obs.get
     val rows = m("rows").asInstanceOf[Long]
     commitMarker(markerPath(outDir, k),
@@ -175,6 +173,28 @@ object Checkpoint {
   }
 
   private val metricsSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** A chunk job's partition count: its bytes over the scan split size,
+    * at least the pool-share floor, and never above the shuffle width
+    * (see [[runChunkFrom]]). */
+  private[graft] def chunkPartitionCount(bytes: Long, split: Long, width: Int,
+      parallelism: Int): Int = {
+    val floor = math.min(width, math.max(1, parallelism / overlapPoolSize))
+    math.max(floor.toLong, math.min(width.toLong, (bytes + split - 1) / split)).toInt
+  }
+
+  /** Parquet writer options that turn the dictionary off for the
+    * annotation-id leaf columns. Their values are unique uuid3 strings,
+    * so parquet-mr would build a dictionary per page and then fall back
+    * to PLAIN anyway; skipping the attempt writes the same bytes for
+    * less CPU. With `emitWordIds = false` every word id is `""`, which
+    * a dictionary does compress, so the word ids keep it then.
+    */
+  private def plainIdColumns(cfg: ExtractConfig): Map[String, String] = {
+    val nested = Seq("blocks", "lines", "tables") ++ (if (cfg.emitWordIds) Seq("words") else Nil)
+    ("turn_id" +: nested.map(f => s"$f.list.element.id"))
+      .map(c => s"parquet.enable.dictionary#$c" -> "false").toMap
+  }
 
   /** Partition-pruned reader for one chunk of a `chunk=`-partitioned
     * dir. Public so CheckpointSpec can assert the plan carries a
@@ -240,35 +260,40 @@ object Checkpoint {
     * partition counts a small chunk no longer serializes the whole
     * run. 2-4 in flight is the guide's plenty; chunks are idempotent
     * and write disjoint dirs/markers, so concurrency does not change
-    * the end state. Results return in chunk order; the first failure
-    * propagates (remaining submitted chunks finish their idempotent
-    * writes or are discarded on retry).
+    * the end state. Results return in chunk order. Completions are
+    * taken as they finish, so the FIRST chunk to fail (not the first
+    * in submission order) propagates at once: it marks the run failed
+    * before its thread is free again, so no queued chunk starts after
+    * it, and the queued futures are cancelled. Chunks already running
+    * finish their idempotent writes (a retry overwrites them).
     */
   private val overlapPoolSize = 4
 
-  private def runChunksOverlapped(ks: Seq[Int], run: Int => ChunkResult): Seq[ChunkResult] = {
+  private[graft] def runChunksOverlapped(ks: Seq[Int], run: Int => ChunkResult): Seq[ChunkResult] = {
+    import java.util.concurrent.{CancellationException, ExecutionException, ExecutorCompletionService}
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(overlapPoolSize, math.max(1, ks.size)))
+    val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
     try {
-      val futures = ks.map(k => pool.submit(new java.util.concurrent.Callable[ChunkResult] {
-        override def call(): ChunkResult = run(k)
-      }))
-      futures.map { f =>
-        try f.get()
+      val done = new ExecutorCompletionService[ChunkResult](pool)
+      val futures = ks.map(k => done.submit { () =>
+        if (failed.get) throw new CancellationException(s"chunk $k not started: another chunk failed")
+        try run(k) catch { case e: Throwable => failed.set(true); throw e }
+      })
+      ks.foreach { _ =>
+        try done.take().get()
         catch {
           // rethrow what the chunk actually threw (callers matched the
-          // SparkException the sequential loop used to propagate), and
-          // cancel the not-yet-started chunks instead of letting them
-          // run on after the caller has already seen the failure.
+          // SparkException the sequential loop used to propagate).
           // cancel(false), NOT shutdownNow(): interrupting RUNNING
           // chunk threads would abandon in-flight Spark jobs and can
-          // cut commitMarker's NIO write mid-stream — running chunks
-          // finish their idempotent writes, queued ones never start
-          case e: java.util.concurrent.ExecutionException =>
+          // cut commitMarker's NIO write mid-stream
+          case e: ExecutionException =>
             futures.foreach(_.cancel(false))
             throw e.getCause
         }
       }
+      futures.map(_.get())
     } finally pool.shutdown()
   }
 

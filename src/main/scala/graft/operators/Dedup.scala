@@ -71,13 +71,14 @@ object Dedup {
     }
   }
 
-  /** One-pass MinHash signature kernel: each shingle is hashed ONCE
+  /** One-pass MinHash signature kernel over a doc's [[shinglesOf]]
+    * shingles (computed once per doc by the caller, which may keep
+    * them for the exact verify): each shingle is hashed ONCE
     * (XXH64 seed 42), then re-seeded per signature slot with a cheap
     * avalanche mix — O(shingles + numHashes·shingles-long-mixes)
     * instead of the Column-space O(numHashes × full-shingle-recompute).
     */
-  def minhashSig(text: String, k: Int, numHashes: Int): Array[Long] = {
-    val sh = shinglesOf(if (text == null) "" else text, k)
+  def minhashSig(sh: Array[String], numHashes: Int): Array[Long] = {
     val base = sh.map(s => XxHash.hashUtf8(s, 42L))
     val sig = Array.fill(numHashes)(Long.MaxValue)
     var i = 0
@@ -104,7 +105,8 @@ object Dedup {
     df.select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
       .as[(Long, String)]
       .mapPartitions(_.map { case (id, t) =>
-        (id, minhashSig(t, k, numHashes), shinglesOf(if (t == null) "" else t, k))
+        val sh = shinglesOf(if (t == null) "" else t, k)
+        (id, minhashSig(sh, numHashes), sh)
       })
       .toDF("id", "sig", "sh")
   }

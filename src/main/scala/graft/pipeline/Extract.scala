@@ -2,7 +2,11 @@ package graft.pipeline
 
 import scala.util.{Try, Success, Failure}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{CreateNamedStruct, If}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
+import graft.functions.NoStageFusion
 import graft.model._
 import graft.kernels.{Segment, Match, Nms, Order}
 
@@ -390,11 +394,6 @@ object Extract {
         words.count(_.readingOrder > 0), et.metrics.parseFailed))
   }
 
-  /** Distributed runner: explicit salted repartition on
-    * `hash(conv_id, turn_idx / saltChunkSize)` so a single monster
-    * conversation spreads over many partitions (north rule: skew), then
-    * one fused mapPartitions kernel. Only one exchange in the job.
-    */
   /** Prefix under which [[run]] registers observed metrics — read them
     * from `QueryExecution.observedMetrics` (or a
     * `QueryExecutionListener`) after any action on the result. Each
@@ -405,13 +404,51 @@ object Extract {
   val MetricsName = "graft_extract"
   private val metricsSeq = new java.util.concurrent.atomic.AtomicLong()
 
+  /** The output encoder of every extraction path: the stock
+    * `ExpressionEncoder[ExtractedTurn]` with its nested array fields
+    * (blocks, words, lines, tables) wrapped in [[NoStageFusion]].
+    *
+    * Fused into whole-stage codegen, the full serializer is one
+    * generated `doConsume` method of more than 8,000 bytecode bytes —
+    * past HotSpot's `HugeMethodLimit`, so it runs interpreted for the
+    * life of the JVM. Unfused, `SerializeFromObject` compiles it as a
+    * method-split `UnsafeProjection` that the JIT does compile. Rows,
+    * schema and serializer pruning are unchanged: a consumer that
+    * prunes every nested field (e.g. `select("extractedText")`) loses
+    * the markers with the fields and stays fused.
+    */
+  val encoder: ExpressionEncoder[ExtractedTurn] = {
+    val stock = ExpressionEncoder[ExtractedTurn]()
+    def unfuseNested(s: CreateNamedStruct): CreateNamedStruct =
+      CreateNamedStruct(s.nameExprs.zip(s.valExprs).flatMap { case (n, v) =>
+        Seq(n, if (v.dataType.isInstanceOf[ArrayType]) NoStageFusion(v) else v)
+      })
+    val serializer = stock.objSerializer match {
+      case If(isNull, nullValue, s: CreateNamedStruct) => If(isNull, nullValue, unfuseNested(s))
+      case other => throw new IllegalStateException(
+        s"unexpected ExtractedTurn serializer shape: ${other.getClass.getName}")
+    }
+    ExpressionEncoder(stock.encoder, serializer, stock.objDeserializer)
+  }
+
+  /** The partition kernel shared by batch and streaming: [[extractTurn]]
+    * over each partition, encoded with [[encoder]]. Narrow, no shuffle.
+    */
+  def extractPartitions(ds: Dataset[Turn], cfg: ExtractConfig): Dataset[ExtractedTurn] =
+    ds.mapPartitions(_.map(t => extractTurn(t, cfg)))(encoder)
+
+  /** Distributed runner: explicit salted repartition on
+    * `hash(conv_id, turn_idx / saltChunkSize)` so a single monster
+    * conversation spreads over many partitions (north rule: skew), then
+    * the [[extractPartitions]] kernel. Only one exchange in the job.
+    */
   def run(ds: Dataset[Turn], cfg: ExtractConfig = ExtractConfig(),
           numPartitions: Option[Int] = None): Dataset[ExtractedTurn] = {
     val spark = ds.sparkSession
-    import spark.implicits._
     val parts = numPartitions.getOrElse(spark.sessionState.conf.numShufflePartitions)
-    ds.repartition(parts, hash(col("conv_id"), floor(col("turn_idx") / cfg.saltChunkSize)))
-      .mapPartitions(_.map(t => extractTurn(t, cfg)))
+    extractPartitions(
+        ds.repartition(parts, hash(col("conv_id"), floor(col("turn_idx") / cfg.saltChunkSize))),
+        cfg)
       // north rule: extraction metrics ride every action (reference
       // `Extras` side-channel, image.py:186 — here observe(), so they
       // reach listeners/snapshot summaries without a second pass)

@@ -11,8 +11,8 @@ import graft.pipeline.{Extract, ExtractConfig}
   * "streaming" means constant-memory iteration — SURVEY §2.5), so this
   * is an extension the 100 TB deployment needs: continuous extraction
   * over arriving transcript files and watermarked windowed aggregation
-  * over the event stream. The SAME per-turn kernel runs in both modes
-  * — `Extract.extractTurn` inside `mapPartitions` is mode-agnostic.
+  * over the event stream. The SAME partition kernel and output encoder
+  * run in both modes — `Extract.extractPartitions` is mode-agnostic.
   */
 object Stream {
 
@@ -28,9 +28,7 @@ object Stream {
   def extractStream(spark: SparkSession, inputDir: String,
       cfg: ExtractConfig = ExtractConfig()): Dataset[ExtractedTurn] = {
     import spark.implicits._
-    spark.readStream.schema(turnSchema).json(inputDir)
-      .as[Turn]
-      .mapPartitions(_.map(t => Extract.extractTurn(t, cfg)))
+    Extract.extractPartitions(spark.readStream.schema(turnSchema).json(inputDir).as[Turn], cfg)
   }
 
   /** Watermarked tumbling-window aggregation over events — the

@@ -253,6 +253,90 @@ class CheckpointSpec extends AnyFunSuite {
     }
     assert(e4.getMessage.contains("_OUT_SCHEMA"))
   }
+
+  test("a failing later chunk surfaces at once and queued chunks never start") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    // 8 chunks on the 4-thread pool: 0, 1 and 3 hold their threads
+    // until released, 2 fails, 4-7 wait in the queue. Waiting in
+    // submission order would block on chunk 0 and let 2's freed thread
+    // start chunk 4; completion order must surface 2's failure first.
+    val release = new CountDownLatch(1)
+    val othersRunning = new CountDownLatch(3)
+    val started = new ConcurrentLinkedQueue[Int]()
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException] {
+      Checkpoint.runChunksOverlapped(0 until 8, { k =>
+        started.add(k)
+        if (k == 2) {
+          othersRunning.await(60, TimeUnit.SECONDS)
+          throw new IllegalStateException("chunk 2 failed")
+        }
+        othersRunning.countDown()
+        release.await(60, TimeUnit.SECONDS)
+        Checkpoint.ChunkResult(k, 0L, skipped = false)
+      })
+    }
+    val waitedS = (System.nanoTime() - t0) / 1e9
+    release.countDown()
+    assert(e.getMessage == "chunk 2 failed")
+    assert(waitedS < 30, s"the failure surfaced only after $waitedS s")
+    import scala.jdk.CollectionConverters._
+    assert(started.asScala.toSet == Set(0, 1, 2, 3))
+  }
+
+  test("chunk partition count: bytes over split, pool-share floor, both within the shuffle width") {
+    val mb = 1L << 20
+    // tiny chunk on 32 cores: the floor (32 / pool of 4) lifts it to 8
+    assert(Checkpoint.chunkPartitionCount(1L, 128 * mb, 16, 32) == 8)
+    // ...but never past a shuffle width narrower than the floor
+    assert(Checkpoint.chunkPartitionCount(1L, 128 * mb, 2, 32) == 2)
+    // large chunk: bytes / split, clamped to the width
+    assert(Checkpoint.chunkPartitionCount(10 * 128 * mb, 128 * mb, 16, 4) == 10)
+    assert(Checkpoint.chunkPartitionCount(100 * 128 * mb, 128 * mb, 16, 4) == 16)
+    assert(Checkpoint.chunkPartitionCount(0L, 128 * mb, 16, 4) == 1)
+  }
+
+  test("overlapped chunks return their results in chunk order") {
+    val rs = Checkpoint.runChunksOverlapped(Seq(3, 1, 2, 0, 5), { k =>
+      Thread.sleep(5L * (5 - k))
+      Checkpoint.ChunkResult(k, k.toLong, skipped = false)
+    })
+    assert(rs.map(_.chunk) == Seq(3, 1, 2, 0, 5))
+  }
+
+  test("chunk outputs write the annotation-id columns without a dictionary") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.column.Encoding
+    import scala.jdk.CollectionConverters._
+    val turns = Turns.synth(spark, TestSpark.sfDir).limit(100)
+    def encodings(cfg: ExtractConfig): Map[String, Set[Encoding]] = {
+      val outDir = Files.createTempDirectory("graft_ckpt_dict").toString
+      Checkpoint.runAll(turns, outDir, 1, cfg)
+      val conf = spark.sparkContext.hadoopConfiguration
+      val files = Files.list(Paths.get(outDir, "chunk=0")).iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+      assert(files.nonEmpty)
+      files.flatMap { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toString), conf))
+        try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+          .map(c => c.getPath.toDotString -> c.getEncodings.asScala.toSet).toSeq
+        finally r.close()
+      }.groupMapReduce(_._1)(_._2)(_ ++ _)
+    }
+    def dictionary(es: Set[Encoding]) = es.exists(_.usesDictionary)
+    val ids = Seq("turn_id", "blocks.list.element.id", "words.list.element.id",
+      "lines.list.element.id", "tables.list.element.id")
+    val on = encodings(ExtractConfig(saltChunkSize = 16))
+    ids.foreach(c => assert(on.contains(c) && !dictionary(on(c)), s"$c: ${on.get(c)}"))
+    // everything else keeps parquet's default (dictionary where it pays)
+    assert(dictionary(on("blocks.list.element.kind")))
+    // without word ids every word id is "": the dictionary stays on
+    val off = encodings(ExtractConfig(saltChunkSize = 16, emitWordIds = false))
+    assert(dictionary(off("words.list.element.id")))
+    assert(!dictionary(off("turn_id")))
+  }
 }
 
 class StreamSpec extends AnyFunSuite {
